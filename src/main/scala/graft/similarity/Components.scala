@@ -1,6 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -112,6 +113,9 @@ object Components {
       val s = lblSum(next).get // non-empty: labels never lose rows
       converged = s == prevSum
       prevSum = s
+      // next is materialized and its lineage cut: the previous round's
+      // checkpoint is dead storage until GC would reach it
+      release(labels)
       labels = next
       it += 1
     }
@@ -122,4 +126,15 @@ object Components {
           "(component diameter exceeds the iteration budget)")
     labels
   }
+
+  /** Frees the storage behind a labels table of
+    * [[connectedComponents]]: its localCheckpoint-ed RDD. The table is
+    * unreadable afterwards. A stopped context has freed it already.
+    */
+  def release(labels: DataFrame): Unit =
+    if (!labels.sparkSession.sparkContext.isStopped)
+      labels.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
 }
