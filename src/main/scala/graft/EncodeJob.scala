@@ -222,7 +222,7 @@ object EncodeJob {
     spark.sparkContext.setLogLevel("WARN")
     Pipeline.buildDocIndex(spark, out,
       indexFiles = opts.getOrElse("indexFiles", "0").toInt)
-    val n = spark.read.parquet(Pipeline.docIndexPath(out)).count()
+    val n = spark.read.schema(Pipeline.DocIndexSchema).parquet(Pipeline.docIndexPath(out)).count()
     println(s"""{"index_rows":$n,"index":"${Pipeline.docIndexPath(out)}"}""")
     spark.stop()
   }

@@ -13,8 +13,16 @@ import graft.engine.{Chunker, Decoder, Encoder, SessionMemo, TokenRow}
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Each input table's schema, inferred once per session: a read
+    * without a schema runs one Spark job to infer it, and the query
+    * bodies read their tables many times.
+    */
+  private val schemaMemo = new SessionMemo[String, org.apache.spark.sql.types.StructType](_ => ())
+
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    s.read.schema(schemaMemo(s, path, path)(s.read.parquet(path).schema)).parquet(path)
+  }
 
   /** Scale-adaptive kernel parallelism (guide §2.5 "input skew — one
     * huge unsplittable file ... repartition immediately after the

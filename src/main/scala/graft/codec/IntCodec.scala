@@ -415,15 +415,44 @@ object IntCodec {
     }
   }
 
-  /** Decode a self-describing buffer produced by any IntCodec. */
+  /** Decode a self-describing buffer produced by any IntCodec.
+    * Throws [[CorruptChunk]] when a fixed-width codec's header promises
+    * more values than the buffer holds, or an RLE run overruns the
+    * value count.
+    */
   def decode(buf: Array[Byte]): Array[Int] = decode(new Reader(buf, 0))
+
+  /** Throws [[CorruptChunk]] unless `bytes` remain after the reader's
+    * position: a header count is checked before it sizes an array.
+    */
+  private def need(r: Reader, bytes: Long, what: => String): Unit = {
+    val left = r.buf.length - r.pos
+    if (bytes > left) throw new CorruptChunk(s"$what needs $bytes bytes, $left remain")
+  }
+
+  /** The pack width in the next header byte, checked to be at most 32
+    * and to leave room for `n` packed values.
+    */
+  private def packWidth(r: Reader, n: Int): Int = {
+    val width = r.readByte() & 0xff
+    if (width > 32) throw new CorruptChunk(s"pack width $width exceeds 32")
+    need(r, (n.toLong * width + 7) / 8, s"$n values at width $width")
+    width
+  }
+
+  private def rleOverrun(run: Int, at: Int, n: Int): Nothing =
+    throw new CorruptChunk(s"rle run of ${run & 0xffffffffL} at value $at overruns $n values")
 
   def decode(r: Reader): Array[Int] = {
     val id = r.readByte()
     val n = r.readUvarint()
-    val dst = new Array[Int](n)
+    if (n < 0) throw new CorruptChunk(s"value count $n is negative")
+    // every known codec writes nothing after a zero count
+    if (n == 0 && id >= 0 && id < byId.length) return Array.emptyIntArray
     id match {
       case 0 => // plain
+        need(r, 4L * n, s"$n plain values")
+        val dst = new Array[Int](n)
         var i = 0
         val b = r.buf
         var p = r.pos
@@ -433,75 +462,81 @@ object IntCodec {
           p += 4; i += 1
         }
         r.pos = p
+        dst
       case 1 => // bitpack
-        if (n > 0) {
-          val width = r.readByte() & 0xff
-          r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
-          var i = 0
-          while (i < n) { dst(i) = unzigzag(dst(i)); i += 1 }
-        }
+        val width = packWidth(r, n)
+        val dst = new Array[Int](n)
+        r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
+        var i = 0
+        while (i < n) { dst(i) = unzigzag(dst(i)); i += 1 }
+        dst
       case 2 | 6 => // for / for8 (same layout, different width choice)
-        if (n > 0) {
-          val mn = unzigzag(r.readUvarint())
-          val width = r.readByte() & 0xff
-          r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
-          var i = 0
-          while (i < n) { dst(i) = dst(i) + mn; i += 1 }
-        }
+        val mn = unzigzag(r.readUvarint())
+        val width = packWidth(r, n)
+        val dst = new Array[Int](n)
+        r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
+        var i = 0
+        while (i < n) { dst(i) = dst(i) + mn; i += 1 }
+        dst
       case 3 => // fordelta
-        if (n > 0) {
-          var prev = unzigzag(r.readUvarint())
+        var prev = unzigzag(r.readUvarint())
+        if (n == 1) Array(prev)
+        else {
+          val width = packWidth(r, n - 1)
+          val dst = new Array[Int](n)
           dst(0) = prev
-          if (n > 1) {
-            val width = r.readByte() & 0xff
-            r.pos = unpackBits(r.buf, r.pos, n - 1, width, dst, 1)
-            var i = 1
-            while (i < n) { prev += unzigzag(dst(i)); dst(i) = prev; i += 1 }
-          }
+          r.pos = unpackBits(r.buf, r.pos, n - 1, width, dst, 1)
+          var i = 1
+          while (i < n) { prev += unzigzag(dst(i)); dst(i) = prev; i += 1 }
+          dst
         }
       case 4 => // rle
+        val dst = new Array[Int](n)
         var i = 0
         while (i < n) {
           val v = unzigzag(r.readUvarint())
           val run = r.readUvarint()
+          if (Integer.compareUnsigned(run, n - i) > 0) rleOverrun(run, i, n)
           java.util.Arrays.fill(dst, i, i + run, v)
           i += run
         }
+        dst
       case 7 => // forsplit
-        if (n > 0) {
-          val mn = unzigzag(r.readUvarint())
-          val w = r.readByte() & 0xff
-          val b = r.buf
-          val p0 = r.pos
-          var plane = 0
-          while (plane < w) {
-            val shift = plane * 8
-            val pp = p0 + plane * n
-            var i = 0
-            while (i < n) { dst(i) |= (b(pp + i) & 0xff) << shift; i += 1 }
-            plane += 1
-          }
+        val mn = unzigzag(r.readUvarint())
+        val w = r.readByte() & 0xff
+        if (w > 4) throw new CorruptChunk(s"forsplit width $w exceeds 4 bytes")
+        need(r, w.toLong * n, s"$n forsplit values of $w bytes")
+        val dst = new Array[Int](n)
+        val b = r.buf
+        val p0 = r.pos
+        var plane = 0
+        while (plane < w) {
+          val shift = plane * 8
+          val pp = p0 + plane * n
           var i = 0
-          while (i < n) { dst(i) += mn; i += 1 }
-          r.pos = p0 + w * n
+          while (i < n) { dst(i) |= (b(pp + i) & 0xff) << shift; i += 1 }
+          plane += 1
         }
+        var i = 0
+        while (i < n) { dst(i) += mn; i += 1 }
+        r.pos = p0 + w * n
+        dst
       case 5 => // dict
-        if (n > 0) {
-          val distinct = r.readUvarint()
-          val dict = new Array[Int](distinct)
-          dict(0) = unzigzag(r.readUvarint())
-          var i = 1
-          while (i < distinct) {
-            dict(i) = (dict(i - 1).toLong + r.readUvarintLong()).toInt
-            i += 1
-          }
-          val width = r.readByte() & 0xff
-          r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
-          i = 0
-          while (i < n) { dst(i) = dict(dst(i)); i += 1 }
+        val distinct = r.readUvarint()
+        val dict = new Array[Int](distinct)
+        dict(0) = unzigzag(r.readUvarint())
+        var i = 1
+        while (i < distinct) {
+          dict(i) = (dict(i - 1).toLong + r.readUvarintLong()).toInt
+          i += 1
         }
+        val width = packWidth(r, n)
+        val dst = new Array[Int](n)
+        r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
+        i = 0
+        while (i < n) { dst(i) = dict(dst(i)); i += 1 }
+        dst
       case other => throw new IllegalArgumentException(s"unknown codec id $other")
     }
-    dst
   }
 }

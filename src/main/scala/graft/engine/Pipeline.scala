@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Job wiring: resumable encode with per-chunk lineage.
   *
@@ -85,12 +86,8 @@ object Pipeline {
     */
   def adoptOrphans(spark: SparkSession, outDir: String): Long = {
     val chunksMeta =
-      try {
-        withMetadataDefaults(spark.read
-          .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-          .parquet(chunksPath(outDir))
-          .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
-      } catch { case _: org.apache.spark.sql.AnalysisException => return 0L }
+      try chunkTable(spark, chunksPath(outDir), payload = false)
+      catch { case _: org.apache.spark.sql.AnalysisException => return 0L }
     val orphans = readLineage(spark, outDir) match {
       case Some(lin) =>
         chunksMeta.join(broadcast(lin.select("chunk_id").distinct()), Seq("chunk_id"), "left_anti")
@@ -110,38 +107,51 @@ object Pipeline {
       Some(df)
     } catch { case _: org.apache.spark.sql.AnalysisException => None }
 
-  /** Schema evolution for chunks at rest: metadata columns added in
-    * later engine versions (input_split, token_cardinality, min_token /
-    * max_token) are filled with unknown/never-prune defaults when a
-    * directory written by an older version lacks them (absent column)
-    * or an explicit-schema read surfaced them as null. Payload columns
-    * are NOT defaulted — their absence still fails loudly. min_token =
-    * MinValue / max_token = MaxValue is the never-prune range (the
-    * inverse of the empty-chunk (MaxValue, MinValue) prune-always
-    * convention); token_cardinality -1 = unknown, consumers decode.
+  private val ChunkSchema: StructType = Encoders.product[EncodedChunk].schema
+
+  /** Schema of the doc-sorted index ([[buildDocIndex]]). Every read of
+    * it passes this schema: a schema-less read runs one Spark job to
+    * infer it.
     */
-  private def withMetadataDefaults(df: DataFrame): DataFrame = {
-    val defaults = Seq[(String, Column)](
-      ("input_split", lit("")),
-      ("token_cardinality", lit(-1)),
-      ("min_token", lit(Int.MinValue)),
-      ("max_token", lit(Int.MaxValue)))
-    val d0 =
-      // doc_bloom's never-prune default IS null (DocBloom.mayContain
-      // treats null as may-contain), so only the absent-column case
-      // needs a synthesized column — no coalesce
-      if (!df.columns.contains("doc_bloom"))
-        df.withColumn("doc_bloom", lit(null).cast("binary"))
-      else df
-    defaults.foldLeft(d0) { case (d, (name, dflt)) =>
-      if (!d.columns.contains(name)) d.withColumn(name, dflt)
-      else d.withColumn(name, coalesce(col(name), dflt))
-    }
+  val DocIndexSchema: StructType =
+    new StructType().add("doc_id", StringType).add("chunk_id", LongType)
+
+  /** The one reader of a chunks directory. The schema is pinned, so no
+    * read pays a schema-inference job, and a directory written by an
+    * older engine version reads its missing metadata columns as null.
+    * Those nulls get unknown/never-prune defaults: input_split "",
+    * token_cardinality -1 (unknown, consumers decode), and min_token =
+    * MinValue / max_token = MaxValue (the never-prune range, the
+    * inverse of the empty-chunk (MaxValue, MinValue) prune-always
+    * convention). doc_bloom's never-prune default IS null
+    * ([[DocBloom.mayContain]]). Payload columns are NOT defaulted —
+    * their absence still fails loudly at decode. `payload = false`
+    * drops the four payload columns: a metadata-only scan.
+    */
+  private def chunkTable(spark: SparkSession, dir: String, payload: Boolean): DataFrame = {
+    val df = spark.read.schema(ChunkSchema).parquet(dir).withColumns(Map(
+      "input_split" -> coalesce(col("input_split"), lit("")),
+      "token_cardinality" -> coalesce(col("token_cardinality"), lit(-1)),
+      "min_token" -> coalesce(col("min_token"), lit(Int.MinValue)),
+      "max_token" -> coalesce(col("max_token"), lit(Int.MaxValue))))
+    if (payload) df else df.drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc")
+  }
+
+  private def docIndexTable(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(DocIndexSchema).parquet(docIndexPath(outDir))
+
+  /** Candidate chunk ids, deduplicated without a shuffle: each
+    * partition keeps its distinct ids, the driver merges them. The
+    * collected size stays bounded by partitions × chunks.
+    */
+  private def distinctChunkIds(ids: DataFrame): Seq[Long] = {
+    import ids.sparkSession.implicits._
+    ids.as[Long].mapPartitions(_.toSet.iterator).collect().distinct.toSeq
   }
 
   def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] = {
     import spark.implicits._
-    withMetadataDefaults(spark.read.parquet(chunksPath(outDir))).as[EncodedChunk]
+    chunkTable(spark, chunksPath(outDir), payload = true).as[EncodedChunk]
   }
 
   /** Consumer read path: decode the chunks table back to token rows,
@@ -249,7 +259,7 @@ object Pipeline {
       inDirs: Seq[String]
   ): IndexedSeq[(Option[String], Option[String], Option[java.math.BigDecimal], Long)] = {
     val per = inDirs.zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(chunksPath(d)).select(
+      chunkTable(spark, chunksPath(d), payload = false).select(
         lit(i).as("dir"),
         col("min_doc_id"), col("max_doc_id"),
         xxhash64(col("chunk_id"), col("checksum"), col("n_rows"))
@@ -436,7 +446,7 @@ object Pipeline {
     val outRows =
       if (!targetHadChunks) rpt.rows
       else {
-        val r = spark.read.parquet(chunksPath(outDir)).agg(sum("n_rows")).first()
+        val r = chunkTable(spark, chunksPath(outDir), payload = false).agg(sum("n_rows")).first()
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }
     rpt.copy(rowsDropped = dirMeta.map(_._4).sum - outRows)
@@ -464,18 +474,21 @@ object Pipeline {
     // chunk_id is a plain parquet column, so the isin pushes to
     // row-group stats; within each survivor, decode only the target
     // doc's token slice (O(doc), not O(chunk) — Decoder.decodeDocTokens)
-    val hit =
-      if (ids.isEmpty)
-        readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else
-        // old-layout dir (null blooms): the candidate list is every
-        // range-covering chunk — too many for an In-list expression;
-        // fall back to the pushable range predicate (same result set)
-        readChunks(spark, outDir)
-          .filter(col("min_doc_id") <= docId && col("max_doc_id") >= docId)
-    hit.flatMap(c => Decoder.decodeDocTokens(c, docId))
+    chunksOf(spark, outDir, ids, col("min_doc_id") <= docId && col("max_doc_id") >= docId)
+      .flatMap(c => Decoder.decodeDocTokens(c, docId))
+  }
+
+  /** The chunks of the candidate `ids`, as a pushed isin filter. Above
+    * 1024 ids (an old-layout dir, whose null blooms make every
+    * range-covering chunk a candidate: too many for an In-list) the
+    * pushable `covering` predicate selects the same chunks.
+    */
+  private def chunksOf(spark: SparkSession, outDir: String, ids: Seq[Long],
+                       covering: => Column): Dataset[EncodedChunk] = {
+    val chunks = readChunks(spark, outDir)
+    if (ids.isEmpty) chunks.filter(lit(false))
+    else if (ids.length <= 1024) chunks.filter(col("chunk_id").isin(ids: _*))
+    else chunks.filter(covering)
   }
 
   /** Phase 1 of a point lookup: the candidate chunk ids, from a
@@ -496,10 +509,7 @@ object Pipeline {
       docId: String
   ): Seq[Long] = {
     import spark.implicits._
-    withMetadataDefaults(spark.read
-      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-      .parquet(chunksPath(outDir))
-      .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
+    chunkTable(spark, chunksPath(outDir), payload = false)
       .filter(col("min_doc_id") <= docId && col("max_doc_id") >= docId)
       .select(col("chunk_id"), col("doc_bloom"))
       .as[(Long, Array[Byte])]
@@ -548,9 +558,7 @@ object Pipeline {
   private def chunkSetFingerprint(spark: SparkSession, outDir: String): String = {
     val cp = chunksPath(outDir)
     fpMemo(spark, cp, new java.io.File(cp).getAbsolutePath) {
-      val r = spark.read
-        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-        .parquet(cp)
+      val r = chunkTable(spark, cp, payload = false)
         .select(xxhash64(col("chunk_id")).as("h"))
         .agg(count(lit(1)), sum(col("h").cast("decimal(20,0)"))).first()
       val s = if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString
@@ -634,14 +642,10 @@ object Pipeline {
       spark: SparkSession,
       outDir: String,
       docIds: Seq[String]
-  ): Option[Seq[Long]] = {
-    import spark.implicits._
-    if (!docIndexIsFresh(spark, outDir)) return None
-    Some(spark.read.parquet(docIndexPath(outDir))
-      .filter(col("doc_id").isin(docIds: _*))
-      .select(col("chunk_id")).distinct()
-      .as[Long].collect().toSeq)
-  }
+  ): Option[Seq[Long]] =
+    if (!docIndexIsFresh(spark, outDir)) None
+    else Some(distinctChunkIds(docIndexTable(spark, outDir)
+      .filter(col("doc_id").isin(docIds: _*)).select(col("chunk_id"))))
 
   /** Least string strictly greater (in UTF-8 order, [[Utf8Order]] =
     * Spark's string order) than every string with the given prefix —
@@ -691,24 +695,14 @@ object Pipeline {
       hi: Option[String]
   ): Seq[Long] = {
     import spark.implicits._
-    val viaIndex =
-      if (!docIndexIsFresh(spark, outDir)) None
-      else {
-        val probe = spark.read.parquet(docIndexPath(outDir))
-          .filter(hi.foldLeft(col("doc_id") >= lo)((p, h) => p && col("doc_id") < h))
-        Some(probe.select(col("chunk_id")).distinct().as[Long].collect().toSeq)
-      }
-    viaIndex.getOrElse {
-      withMetadataDefaults(spark.read
-        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-        .parquet(chunksPath(outDir))
-        .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
+    if (docIndexIsFresh(spark, outDir))
+      distinctChunkIds(docIndexTable(spark, outDir)
+        .filter(hi.foldLeft(col("doc_id") >= lo)((p, h) => p && col("doc_id") < h))
+        .select(col("chunk_id")))
+    else
+      chunkTable(spark, chunksPath(outDir), payload = false)
         .filter(hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h))
-        .select(col("chunk_id"))
-        .as[Long]
-        .collect()
-        .toSeq
-    }
+        .select(col("chunk_id")).as[Long].collect().toSeq
   }
 
   /** Range read over AT-REST chunks: every doc with lo <= doc_id < hi
@@ -727,13 +721,9 @@ object Pipeline {
     val ids = lookupChunkIdsForRange(spark, outDir, lo, hi)
     val inRange = (id: String) => Utf8Order.lteq(lo, id) &&
       hi.forall(h => Utf8Order.lt(id, h))
-    val hit =
-      if (ids.isEmpty) readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else readChunks(spark, outDir)
-        .filter(hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h))
-    hit.flatMap(c => Decoder.decodeDocsTokensWhere(c, inRange))
+    chunksOf(spark, outDir, ids,
+      hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h))
+      .flatMap(c => Decoder.decodeDocsTokensWhere(c, inRange))
   }
 
   /** Prefix read: every doc whose id starts with `prefix` — the
@@ -749,14 +739,9 @@ object Pipeline {
   ): Dataset[TokenRow] = {
     import spark.implicits._
     val ids = lookupChunkIdsForRange(spark, outDir, prefix, prefixSuccessor(prefix))
-    val hit =
-      if (ids.isEmpty) readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else readChunks(spark, outDir).filter(
-        prefixSuccessor(prefix).foldLeft(col("max_doc_id") >= prefix)(
-          (p, h) => p && col("min_doc_id") < h))
-    hit.flatMap(c => Decoder.decodeDocsTokensWhere(c, _.startsWith(prefix)))
+    chunksOf(spark, outDir, ids, prefixSuccessor(prefix).foldLeft(col("max_doc_id") >= prefix)(
+      (p, h) => p && col("min_doc_id") < h))
+      .flatMap(c => Decoder.decodeDocsTokensWhere(c, _.startsWith(prefix)))
   }
 
   /** Batch point lookup: all requested docs in one pass. Candidates
@@ -778,10 +763,7 @@ object Pipeline {
       // the stored bounds, both UTF-8 byte order
       val kMax = docIds.max(Utf8Order)
       val kMin = docIds.min(Utf8Order)
-      withMetadataDefaults(spark.read
-        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-        .parquet(chunksPath(outDir))
-        .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
+      chunkTable(spark, chunksPath(outDir), payload = false)
         .filter(col("min_doc_id") <= kMax && col("max_doc_id") >= kMin)
         .select(col("chunk_id"), col("min_doc_id"), col("max_doc_id"), col("doc_bloom"))
         .as[(Long, String, String, Array[Byte])]
@@ -812,14 +794,9 @@ object Pipeline {
     import spark.implicits._
     if (docIds.isEmpty) return spark.emptyDataset[TokenRow]
     val keys = docIds.toSet
-    val hit =
-      if (ids.isEmpty) readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else readChunks(spark, outDir)
-        .filter(col("max_doc_id") >= docIds.min(Utf8Order) &&
-          col("min_doc_id") <= docIds.max(Utf8Order))
-    hit.flatMap(c => Decoder.decodeDocsTokens(c, keys))
+    chunksOf(spark, outDir, ids, col("max_doc_id") >= docIds.min(Utf8Order) &&
+      col("min_doc_id") <= docIds.max(Utf8Order))
+      .flatMap(c => Decoder.decodeDocsTokens(c, keys))
   }
 
   /** Projection-aware metadata read: (chunk_id, doc_id, n_tok, source)
@@ -831,9 +808,7 @@ object Pipeline {
     */
   def readDocIndex(spark: SparkSession, outDir: String): Dataset[DocIndexRow] = {
     import spark.implicits._
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-      .parquet(chunksPath(outDir))
+    chunkTable(spark, chunksPath(outDir), payload = true)
       .select(col("chunk_id"), col("doc_ids_enc"), col("lengths_enc"), col("sources_enc"))
       .as[(Long, Array[Byte], Array[Byte], Array[Byte])]
       .mapPartitions(_.flatMap { case (id, d, l, s) =>
@@ -992,9 +967,7 @@ object Pipeline {
       // nothing pending (empty append writes no partition dirs).
       val waveDir = s"${chunksPath(outDir)}/wave_id=$w"
       if (fsOf(spark, waveDir).exists(new org.apache.hadoop.fs.Path(waveDir))) {
-        val writtenAll = spark.read
-          .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-          .parquet(waveDir)
+        val writtenAll = chunkTable(spark, waveDir, payload = false)
         // on resume, the dir also holds chunks from the previous run:
         // exclude anything already in the lineage table
         val written = completed match {

@@ -243,4 +243,30 @@ class IntCodecSpec extends AnyFunSuite {
       java.util.Arrays.copyOfRange(want, start, end)),
       "fordelta decodeRange read bytes past the slice's last delta")
   }
+
+  test("a plain header promising 2^31 values in 6 bytes is CorruptChunk, not an allocation") {
+    val buf = Array(0x00, 0xf0, 0xff, 0xff, 0xff, 0x07).map(_.toByte)
+    intercept[CorruptChunk](IntCodec.decode(buf))
+  }
+
+  test("every fixed-width codec checks its value count against the bytes left") {
+    val data = Array.tabulate(100)(i => i * 37 % 101 - 50)
+    for (codec <- IntCodec.all if codec != IntCodec.Rle) {
+      val enc = codec.encode(data)
+      assert(enc(1) == 100, "a one-byte count, replaced below")
+      // the same payload under a count of 2^31 - 16
+      val inflated = enc.take(1) ++ Array(0xf0, 0xff, 0xff, 0xff, 0x07).map(_.toByte) ++ enc.drop(2)
+      intercept[CorruptChunk](IntCodec.decode(inflated))
+      // the real count, one payload byte short
+      intercept[CorruptChunk](IntCodec.decode(enc.dropRight(1)))
+    }
+  }
+
+  test("an rle run past the value count is CorruptChunk") {
+    // rle, n = 3, then value zigzag(1) = 2 with a run of 5
+    intercept[CorruptChunk](IntCodec.decode(Array[Byte](4, 3, 2, 5)))
+    // a second run that overruns what the first left
+    intercept[CorruptChunk](IntCodec.decode(Array[Byte](4, 3, 2, 2, 4, 2)))
+    assert(IntCodec.decode(Array[Byte](4, 3, 2, 2, 4, 1)).toSeq == Seq(1, 1, 2))
+  }
 }
